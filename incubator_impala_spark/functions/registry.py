@@ -48,6 +48,97 @@ def _raise_keep_native():
     raise ValueError("keep native spelling")
 
 
+# DataSketches KLL (ds_kll_*) on Spark's native kll_*_float functions.
+# Spark's getters take the rank / probe value only as a constant
+# (foldable) expression, where the reference evaluates it per row.
+# Constant arguments go straight to the native getter; any other
+# argument reads the sketch's quantile function on the fixed rank grid
+# 0, 1/G, ..., 1, which adds at most 1/G to the sketch's rank error.
+_KLL_GRID = 1000
+_NUM_LITERAL = re.compile(r"^[-+]?(\d+\.?\d*|\.\d+)([eE][-+]?\d+)?[dDfF]?$")
+
+
+def _kll_points(args):
+    """Variadic ranks / split points as SQL texts; one quoted
+    comma-joined list ('0.25,0.5,0.75') is split into its items."""
+    out = []
+    for a in (x.strip() for x in args):
+        if len(a) > 1 and a[0] == a[-1] and a[0] in "'\"":
+            out += [p.strip() for p in a[1:-1].split(",")]
+        else:
+            out.append(a)
+    return out
+
+
+def _kll_grid_zip(s, points, body):
+    """zip_with each point against the sketch's quantiles on the rank
+    grid (one native call per row); NULL for a NULL sketch."""
+    grid = ", ".join(f"{j / _KLL_GRID}d" for j in range(_KLL_GRID + 1))
+    return (
+        f"if({s} is null, null, zip_with(array({', '.join(points)}), "
+        f"array_repeat(kll_sketch_get_quantile_float({s}, array({grid})), "
+        f"{len(points)}), (p, g) -> if(p is null, null, {body})))")
+
+
+def _kll_quantiles(s, ranks):
+    """array<float>: the sketch's quantiles at `ranks`. A rank outside
+    [0, 1] raises, as the reference does."""
+    if all(_NUM_LITERAL.match(r.strip()) for r in ranks):
+        arr = ", ".join(f"cast({r} as double)" for r in ranks)
+        return f"kll_sketch_get_quantile_float({s}, array({arr}))"
+    return _kll_grid_zip(
+        s, [f"cast({r} as double)" for r in ranks],
+        f"if(p between 0 and 1, g[cast(ceil(p * {_KLL_GRID}) as int)], "
+        f"raise_error('ds_kll_quantile: rank must be in [0, 1]'))")
+
+
+def _kll_ranks(s, values):
+    """array<double>: the sketch's inclusive (<=) normalized ranks of
+    `values`."""
+    vals = [f"cast({v} as float)" for v in values]
+    if all(_NUM_LITERAL.match(v.strip()) for v in values):
+        return f"kll_sketch_get_rank_float({s}, array({', '.join(vals)}))"
+    return _kll_grid_zip(
+        s, vals,
+        f"greatest(size(filter(g, q -> q <= p)) - 1, 0) / {_KLL_GRID}d")
+
+
+def _cxx_g(v, digits=6):
+    """A number as the reference's C++ ostream prints it (printf %g);
+    Java's %g keeps trailing zeros, so they are stripped."""
+    return (f"regexp_replace(format_string('%.{digits}g', {v}), "
+            "'[.]0+(?=e|$)|([.][0-9]*[1-9])0+(?=e|$)', '$1')")
+
+
+def _cxx_list(arr):
+    return f"array_join(transform({arr}, v -> {_cxx_g('v')}), ',')"
+
+
+def _kll_stringify(s):
+    """The native KllFloatsSketch summary, reshaped into the reference's
+    to_string field set on one line (so a row survives row_regex)."""
+    text = f"kll_sketch_to_string_float({s})"
+
+    def field(name):
+        return f"regexp_extract({text}, '(?m)^ +{name} +: (.*)$', 1)"
+
+    fields = [
+        ("K", field("K")),
+        ("Epsilon", field("Epsilon")),
+        ("Epsilon PMF", field("Epsilon PMF")),
+        ("Empty", field("Empty")),
+        ("Estimation mode", field("Estimation Mode")),
+        ("N", field("N")),
+        ("Levels", field("Levels")),
+        ("Retained items", field("Retained Items")),
+        ("Min value", _cxx_g(f"cast({field('Min Item')} as float)")),
+        ("Max value", _cxx_g(f"cast({field('Max Item')} as float)")),
+    ]
+    body = ", '; ', ".join(f"'{label} : ', {v}" for label, v in fields)
+    return (f"concat('### KLL sketch summary: ', {body}, "
+            "' ### End sketch summary')")
+
+
 MACROS = {
     # conditional family (be/src/exprs/conditional-functions*.cc)
     "zeroifnull": lambda a: f"coalesce({a[0]}, 0)",
@@ -457,21 +548,43 @@ MACROS = {
             f"hll_sketch_estimate(cast({s} as binary))), {kappa})"
         ))(a[0], a[1] if len(a) > 1 else "2")
     ),
-    # variadic quantile fractions -> one comma-joined string arg
-    "ds_kll_quantiles_as_string": lambda a: (
-        f"ds_kll_quantiles_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
+    # DataSketches KLL family (BuiltinsDb.java:1327-1374;
+    # impala_functions.py:944-954): Spark 4.1 ships the same Apache
+    # DataSketches KllFloatsSketch natively, so sketches are mergeable
+    # JVM aggregates (partial + merge) and their bytes are DataSketches
+    # KLL. The aggregates return NULL when no value updated the sketch
+    # (all-NULL/NaN or empty input; the reference UDA's finalize), which
+    # also keeps the getters off the empty sketch they reject. Sketches
+    # round-trip through STRING table columns, so the scalars cast back
+    # to binary (see the _kll_* helpers above for the getters).
+    "ds_kll_sketch": lambda a: (
+        (lambda agg: f"if(kll_sketch_get_n_float({agg}) = 0, null, {agg})")(
+            f"kll_sketch_agg_float(cast({a[0]} as float))")
     ),
-    # variadic split points -> the comma-joined convention the kll
-    # string functions use (impala_functions.py:952-954)
+    "ds_kll_union": lambda a: (
+        (lambda agg: f"if(kll_sketch_get_n_float({agg}) = 0, null, {agg})")(
+            f"kll_merge_agg_float(cast({a[0]} as binary))")
+    ),
+    "ds_kll_quantile": lambda a: (
+        f"{_kll_quantiles(f'cast({a[0]} as binary)', [a[1]])}[0]"),
+    "ds_kll_rank": lambda a: (
+        f"{_kll_ranks(f'cast({a[0]} as binary)', [a[1]])}[0]"),
+    "ds_kll_n": lambda a: f"kll_sketch_get_n_float(cast({a[0]} as binary))",
+    "ds_kll_quantiles_as_string": lambda a: _cxx_list(
+        _kll_quantiles(f"cast({a[0]} as binary)", _kll_points(a[1:]))),
+    # CDF: the ranks of the n split points plus a trailing 1.0; PMF:
+    # the successive differences of that CDF (the DataSketches contract)
     "ds_kll_cdf_as_string": lambda a: (
-        f"ds_kll_cdf_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
+        (lambda r: _cxx_list(f"concat({r}, array(1d))"))(
+            _kll_ranks(f"cast({a[0]} as binary)", _kll_points(a[1:])))
     ),
     "ds_kll_pmf_as_string": lambda a: (
-        f"ds_kll_pmf_impl({a[0]}, concat_ws(',', "
-        + ", ".join(f"cast({x} as string)" for x in a[1:]) + "))"
+        (lambda r: _cxx_list(
+            f"zip_with(concat({r}, array(1d)), concat(array(0d), {r}), "
+            "(hi, lo) -> hi - lo)"))(
+            _kll_ranks(f"cast({a[0]} as binary)", _kll_points(a[1:])))
     ),
+    "ds_kll_stringify": lambda a: _kll_stringify(f"cast({a[0]} as binary)"),
     # histogram (BuiltinsDb.java:1001; HistogramFinalize,
     # aggregate-functions-ir.cc:1413-1435): min(n,100) values from the
     # sorted sample at indices (i+1)*max(n/100,1)-1 — reproduced

@@ -544,13 +544,16 @@ def fn_uda_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # DataSketches KLL quantile family (BuiltinsDb.java:1327-1374;
-# datasketches-functions-ir.cc). The sketch itself is the pure-Python
-# KLL in functions/sketches.py (datasketches pip pkg absent in env).
+# datasketches-functions-ir.cc) on Spark's native DataSketches KLL
+# (kll_sketch_agg_float: one JVM ObjectHashAggregate, partial + merge,
+# so only ~KB sketches cross the exchange).
 # Oracle contract: an estimator can't hash-match an exact engine, so
 # the entry returns *validated* quantile quality — the realized rank
 # of each estimated quantile must sit within 0.05 of its target (KLL
-# k=200 delivers ~0.01), which the oracle states as constants. The
-# exact per-group row count rides along as a hard-matched value.
+# k=200 delivers ~0.013), which the oracle states as constants. A
+# group with no values (all-NULL `value`) has nothing outside the
+# bound, so its flags are 1 too. The exact per-group row count rides
+# along as a hard-matched value.
 # ---------------------------------------------------------------------------
 @_register(
     "fn_sketch_kll",
@@ -562,39 +565,27 @@ def fn_uda_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from incubator_impala_spark.functions import sketches
-
-    sketches.register(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # r11 (guide §4/§2.3): per-partition partial sketches + union merge
-    # instead of a GROUPED_AGG over the raw rows — the old plan
-    # shuffled every event row to ONE Python worker per event_type
-    # (ArrowAggregatePython after a full sort+exchange); now only ~KB
-    # serialized sketch partials cross the exchange. Quantile
-    # estimates stay within the KLL error bound the entry verifies.
-    sk = sketches.grouped_kll_sketches(ev, "event_type", "value")
-    est = sk.select(
-        "event_type",
-        F.expr("ds_kll_quantile(sk, 0.25d)").alias("q25"),
-        F.expr("ds_kll_quantile(sk, 0.50d)").alias("q50"),
-        F.expr("ds_kll_quantile(sk, 0.75d)").alias("q75"),
-    )
-    # LEFT join (r12, ADVICE r11): grouped_kll_sketches omits groups
-    # whose values are all NULL (and a NULL event_type key never
-    # matches an equi-join) — an inner join would silently drop those
-    # groups from the output, whereas the old GROUPED_AGG form and the
-    # oracle emit them. Left join keeps the row set identical for
-    # degenerate groups (their q* come back NULL, ok flags NULL).
-    joined = ev.join(F.broadcast(est), "event_type", "left")
+    sk = "kll_sketch_agg_float(cast(value as float))"
+    # an empty sketch (no non-NULL value) is rejected by the getters
+    est = ev.groupBy(F.col("event_type").alias("k")).agg(F.expr(
+        f"if(kll_sketch_get_n_float({sk}) = 0, null, "
+        f"kll_sketch_get_quantile_float({sk}, array(0.25d, 0.5d, 0.75d)))"
+    ).alias("q"))
+    # null-safe key: the NULL event_type group is checked like any other
+    joined = ev.join(
+        F.broadcast(est), ev["event_type"].eqNullSafe(est["k"]), "left")
 
-    def ok(q: str, target: float):
-        realized = F.avg((F.col("value") <= F.col(q)).cast("double"))
-        return (F.abs(realized - F.lit(target)) < 0.05).cast("int")
+    def ok(i: int, target: float):
+        realized = F.avg(
+            (F.col("value").cast("float") <= F.col("q")[i]).cast("double"))
+        return F.coalesce(
+            (F.abs(realized - F.lit(target)) < 0.05).cast("int"), F.lit(1))
 
     return joined.groupBy("event_type").agg(
-        ok("q25", 0.25).alias("q25_ok"),
-        ok("q50", 0.50).alias("q50_ok"),
-        ok("q75", 0.75).alias("q75_ok"),
+        ok(0, 0.25).alias("q25_ok"),
+        ok(1, 0.50).alias("q50_ok"),
+        ok(2, 0.75).alias("q75_ok"),
         F.count("*").alias("n_rows"),
     )
 

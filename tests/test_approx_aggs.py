@@ -104,8 +104,10 @@ def test_set_statement_through_sql(engine):
 
 
 # ---------------------------------------------------------------------------
-# ds_kll_* quantile-sketch family (BuiltinsDb.java:1327-1374) — the
-# pure-Python KLL in functions/sketches.py, SQL-registered.
+# ds_kll_* quantile-sketch family (BuiltinsDb.java:1327-1374) — dialect
+# macros over Spark's native DataSketches KLL (functions/registry.py).
+# Compaction is randomized, as in the reference, so these tests assert
+# error bounds and contracts, never exact sketch values.
 # ---------------------------------------------------------------------------
 
 
@@ -147,8 +149,8 @@ def test_kll_union_mergeability(engine, li_view):
 
 
 def test_kll_rank_and_n(engine, li_view):
-    # NB: a pandas GROUPED_AGG can't share an Aggregate with JVM
-    # aggregates — sketch and exact stats come from separate subqueries
+    # the probe value comes from another subquery, so it is not a
+    # constant: this exercises ds_kll_rank's per-row (rank grid) path
     row = engine.sql(
         f"""
         SELECT ds_kll_rank(sk, med) AS r, ds_kll_n(sk) AS n, exact_n
@@ -161,15 +163,90 @@ def test_kll_rank_and_n(engine, li_view):
     assert abs(row.r - 0.5) < 0.02
 
 
-def test_kll_serialization_roundtrip():
-    from incubator_impala_spark.functions.sketches import KllSketch
+def test_kll_serialization_roundtrip(spark, engine, li_view, tmp_path):
+    """A sketch stored in a STRING table column (the reference keeps
+    sketches that way) reads back with its bytes intact and answers
+    ds_kll_quantile / ds_kll_n / ds_kll_rank exactly like the in-memory
+    sketch it came from."""
+    sk = engine.sql(
+        f"SELECT ds_kll_sketch(l_extendedprice) AS sk FROM {li_view}"
+    ).collect()[0].sk
+    spark.createDataFrame([(sk,)], "sk binary").createOrReplaceTempView(
+        "kll_mem")
+    path = str(tmp_path / "kll_str")
+    spark.sql("SELECT cast(sk AS string) AS s FROM kll_mem").write.parquet(
+        path)
+    stored = spark.read.parquet(path)
+    assert dict(stored.dtypes) == {"s": "string"}
+    stored.createOrReplaceTempView("kll_str")
 
-    sk = KllSketch(160)
-    sk.update_many(float(i % 997) for i in range(50000))
-    rt = KllSketch.deserialize(sk.serialize())
-    assert rt.n == sk.n
-    assert rt.quantile(0.3) == sk.quantile(0.3)
-    assert rt.rank(500.0) == sk.rank(500.0)
+    def probe(view, col):
+        return engine.sql(
+            f"SELECT ds_kll_quantile({col}, 0.3d) AS q, ds_kll_n({col}) AS n,"
+            f" ds_kll_rank({col}, 30000) AS r,"
+            f" cast({col} AS binary) AS b FROM {view}"
+        ).collect()[0]
+
+    mem, back = probe("kll_mem", "sk"), probe("kll_str", "s")
+    assert bytes(back.b) == bytes(mem.b) == bytes(sk)
+    assert (back.q, back.n, back.r) == (mem.q, mem.n, mem.r)
+    assert mem.n == engine.sql(
+        f"SELECT count(l_extendedprice) AS c FROM {li_view}"
+    ).collect()[0].c
+
+
+def test_kll_all_null_and_empty_input(engine, li_view):
+    """No value updates the sketch -> NULL sketch (the reference UDA's
+    finalize), and the getters pass the NULL through; a global
+    aggregate over an empty relation still returns its one row."""
+    row = engine.sql(
+        f"""
+        SELECT ds_kll_sketch(CAST(NULL AS DOUBLE)) AS sk,
+               ds_kll_quantile(ds_kll_sketch(CAST(NULL AS DOUBLE)), 0.5d) AS q,
+               ds_kll_n(ds_kll_sketch(CAST(NULL AS DOUBLE))) AS n
+        FROM {li_view}
+        """
+    ).collect()
+    assert [tuple(r) for r in row] == [(None, None, None)]
+    empty = engine.sql(
+        f"SELECT ds_kll_sketch(l_quantity) AS sk, "
+        f"ds_kll_n(ds_kll_sketch(l_quantity)) AS n "
+        f"FROM {li_view} WHERE l_quantity < 0"
+    ).collect()
+    assert [tuple(r) for r in empty] == [(None, None)]
+
+
+@pytest.mark.parametrize("rank", ["1.5d", "-0.1d", "r"])
+def test_kll_quantile_rank_out_of_range_raises(engine, li_view, rank):
+    """The reference's ds_kll_quantile rejects a rank outside [0, 1];
+    so do the constant (native getter) and per-row (rank grid) paths."""
+    with pytest.raises(Exception, match="(?i)quantile|rank"):
+        engine.sql(
+            f"""
+            SELECT ds_kll_quantile(sk, {rank}) AS q
+            FROM (SELECT ds_kll_sketch(l_quantity) AS sk FROM {li_view}),
+                 (SELECT 1.5d AS r)
+            """
+        ).collect()
+
+
+def test_kll_string_values_render_like_cxx_g(engine):
+    """The *_as_string printers render numbers like the reference's C++
+    ostream (printf %g: 6 significant digits, no trailing zeros) — the
+    same text Python's f"{v:g}" gives for the sketch's FLOAT value."""
+    import struct
+
+    vals = [0.0, 1.0, 25.0, 0.5123456, 1e-05, 1234567.0, -2.5]
+    rows = engine.sql(
+        "SELECT v, ds_kll_quantiles_as_string(ds_kll_sketch(v), 0.5) AS s "
+        "FROM (SELECT explode(array("
+        + ", ".join(f"cast({v!r} AS DOUBLE)" for v in vals)
+        + ")) AS v) GROUP BY v"
+    ).collect()
+    got = {r.v: r.s for r in rows}
+    for v in vals:
+        f32 = struct.unpack("f", struct.pack("f", v))[0]
+        assert got[v] == f"{f32:g}", (v, got[v])
 
 
 def test_sampled_ndv_operator_extrapolates(spark):

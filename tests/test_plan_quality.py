@@ -128,6 +128,17 @@ def test_simhash_candidates_are_equi_join(q):
     assert "seg_val" in opt and "seg_idx" in opt
 
 
+def test_fn_sketch_kll_has_no_python_nodes(q):
+    """fn_sketch_kll sketches on Spark's native DataSketches KLL: a JVM
+    ObjectHashAggregate with a partial (map-side) and a merge step, and
+    no Python worker anywhere in the plan."""
+    plan = _plan(q["fn_sketch_kll"])
+    for node in ("MapInPandas", "ArrowAggregatePython", "ArrowEvalPython",
+                 "FlatMapGroupsInPandas", "BatchEvalPython"):
+        assert node not in plan, node
+    assert "partial_kll_sketch_agg_float" in plan
+
+
 def test_sql_broadcast_hint_respected(spark):
     """SQL join-strategy hints (/*+ BROADCAST(t) */) — the user-facing
     analogue of the reference's join distribution-mode query options."""
