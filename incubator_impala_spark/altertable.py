@@ -261,39 +261,6 @@ def _fold_spec(engine, spec: str) -> list[tuple[str, str]]:
     return items
 
 
-def _drop_parts_by_predicate(engine, tbl: str, spec: str) -> int:
-    """DROP PARTITION with comparison predicates (``p < '1400-01-01',
-    q = 2`` — items are ANDed). Evaluates the predicate per catalog
-    partition (metadata-sized, not data-sized) and drops matches."""
-    import urllib.parse
-
-    spark = engine.spark
-    types = {c.name.lower(): c.dataType
-             for c in spark.catalog.listColumns(tbl) if c.isPartition}
-    pred = " AND ".join(
-        x for x in dialect._split_args(spec) if x.strip())
-    dropped = 0
-    for r in spark.sql(f"SHOW PARTITIONS {tbl}").collect():
-        kv = dict(x.split("=", 1) for x in r[0].split("/"))
-        assigns = ", ".join(
-            "CAST('{}' AS {}) AS `{}`".format(
-                urllib.parse.unquote(v).replace("'", "''"),
-                types.get(k.lower(), "string"), k)
-            for k, v in kv.items())
-        hit = spark.sql(
-            f"SELECT ({engine.translate(pred)}) "
-            f"FROM (SELECT {assigns})").collect()[0][0]
-        if hit:
-            sql_spec = ", ".join(
-                "`{}`='{}'".format(
-                    k, urllib.parse.unquote(v).replace("'", "''"))
-                for k, v in kv.items())
-            spark.sql(
-                f"ALTER TABLE {tbl} DROP PARTITION ({sql_spec})")
-            dropped += 1
-    return dropped
-
-
 def _drop_sort_col(engine, tbl: str, col: str) -> None:
     sp = engine.sort_props.get(tbl.lower())
     if sp:

@@ -5,8 +5,9 @@ functions as dialect macros (`functions/registry.py::MACROS`): HLL on
 `hll_sketch_agg` & co., KLL (`ds_kll_*`) on `kll_sketch_agg_float` & co.
 Both embed Apache DataSketches, the library the reference vendors in
 be/src/thirdparty/datasketches. What is left here is the HLL debug
-printers, which read the sketch preamble that Spark does not expose,
-and the sampled-NDV extrapolation.
+printers, which read the sketch preamble that Spark does not expose.
+(Sampled-NDV extrapolation runs in Spark:
+`operators/sampling.py::sampled_ndv`.)
 """
 
 from __future__ import annotations
@@ -102,23 +103,3 @@ def register(spark) -> None:
 
     spark.udf.register("ds_hll_bounds_impl", hll_bounds_as_string)
     spark.udf.register("ds_hll_stringify_impl", hll_stringify)
-
-
-def sampled_ndv_estimate(d: int, f1: int, sample_n: int, fraction: float) -> int:
-    """Extrapolate NDV from a sample: Duj1 estimator (Haas et al.,
-    SIGMOD'95 — the same estimator family the reference's curve-fit
-    SampledNdvFinalize approximates, aggregate-functions-ir.cc:2100+):
-
-        D_hat = d / (1 - (1 - q) * f1 / n)
-
-    d = distinct values in sample, f1 = values seen exactly once,
-    n = sample row count, q = sampling fraction.
-    """
-    if sample_n == 0:
-        return 0
-    if fraction >= 1.0:
-        return d
-    denom = 1.0 - (1.0 - fraction) * f1 / sample_n
-    if denom <= 0:
-        denom = 1.0 / sample_n
-    return int(round(d / denom))

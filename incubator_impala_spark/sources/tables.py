@@ -33,34 +33,35 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Give an events frame a µs TimestampType `ts` and the raw int64
+    nanos in `ts_ns`, whatever the file's physical ts layout. Shared by
+    the batch loader and the events stream."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        # int64 nanos -> µs TimestampType (truncating division; all
+        # event times are post-epoch). Keep ts_ns for full precision.
+        return (
+            df.withColumnRenamed("ts", "ts_ns")
+            .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
+        )
+    # µs-native file (TIMESTAMP or TIMESTAMP_NTZ — the NTZ form
+    # matches the reference's timezoneless semantics,
+    # timestamp-value.h:45-61). Derive ts_ns so the loader contract
+    # (raw int64 nanos alongside ts) holds for both physical layouts,
+    # and normalize ts itself to TimestampType so the contract's ts
+    # dtype does not depend on the physical file layout (unix_micros(ts)
+    # etc. work unconditionally); session tz is pinned UTC so the
+    # NTZ->TZ cast is exact.
+    return df.withColumn(
+        "ts_ns", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table; normalizes the events timestamp column."""
     configure_session(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if name == "events":
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
-            # int64 nanos -> µs TimestampType (truncating division; all
-            # event times are post-epoch). Keep ts_ns for full precision.
-            df = (
-                df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
-            )
-        else:
-            # µs-native file (TIMESTAMP or TIMESTAMP_NTZ — the NTZ form
-            # matches the reference's timezoneless semantics,
-            # timestamp-value.h:45-61). Derive ts_ns so the loader
-            # contract (raw int64 nanos alongside ts) holds for both
-            # physical layouts, and normalize ts itself to TimestampType
-            # so the contract's ts dtype does not depend on the physical
-            # file layout (unix_micros(ts) etc. work unconditionally);
-            # session tz is pinned UTC so the NTZ->TZ cast is exact.
-            df = df.withColumn(
-                "ts_ns",
-                F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000),
-            ).withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:

@@ -19,7 +19,6 @@ import uuid
 
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -27,6 +26,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from incubator_impala_spark.session import configure_session
+from incubator_impala_spark.sources.tables import normalize_events_ts
 
 # Physical schema of events.parquet under nanosAsLong when the file
 # carries TIMESTAMP(NANOS): ts is int64 nanos (the reference's TIMESTAMP
@@ -52,8 +54,7 @@ def read_events_stream(spark: SparkSession, events_dir: str,
     raw int64 nanos kept in ts_ns, exactly like the batch loader.
     The file-source needs an explicit schema: probe it with a driver-side
     batch read (footer-only, no job) and branch on the physical layout."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_session(spark)
     try:
         schema = spark.read.parquet(events_dir).schema
     except PySparkException:
@@ -64,15 +65,7 @@ def read_events_stream(spark: SparkSession, events_dir: str,
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(events_dir)
-    if dict(df.dtypes).get("ts") == "bigint":
-        return (
-            df.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
-        )
-    return df.withColumn(
-        "ts_ns", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(reader.parquet(events_dir))
 
 
 def watermarked(events: DataFrame, delay: str = "2 hours") -> DataFrame:

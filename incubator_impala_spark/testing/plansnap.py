@@ -104,6 +104,9 @@ _SCRUBS = [
                 r"[0-9a-f]{12}"), "uuid"),
     # broadcast exchange ids / reuse ids
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=x]"),
+    # JVM identity hashes of literal objects (a folded array literal
+    # prints as UnsafeArrayData@7a50b5f7) differ from JVM to JVM
+    (re.compile(r"\b(UnsafeArrayData|UnsafeMapData)@[0-9a-f]+\b"), r"\1@x"),
 ]
 
 

@@ -33,6 +33,7 @@ def test_bucketed_join_has_no_shuffle(spark, db):
     (li.write.mode("overwrite").bucketBy(8, "l_orderkey")
      .sortBy("l_orderkey").saveAsTable(f"{db}.li_b"))
 
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = spark.table(f"{db}.li_b").join(
@@ -46,8 +47,7 @@ def test_bucketed_join_has_no_shuffle(spark, db):
         want = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
         assert joined.count() == want
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
 
 
 def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):

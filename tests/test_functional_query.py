@@ -1517,12 +1517,18 @@ def test_views_compatibility(functional_engine):
     assert n_pass >= 17, n_pass
 
 
-def test_invalid_header_rejected():
+def test_invalid_header_rejected(tmp_path):
     """invalid_header.test: the reference's meta-contract
     (tests/query_test/test_invalid_test_header.py) — a .test file
     whose header starts with '----' must be rejected, not silently
-    partially ignored."""
+    partially ignored. The file is built here, in the shape of the
+    reference's invalid_header.test."""
     from incubator_impala_spark.testing import querytest as qt
 
+    path = tmp_path / "invalid_header.test"
+    path.write_text("---- QUERY\nselect 1\n---- RESULTS\n1\n"
+                    "---- TYPES\nTINYINT\n====\n"
+                    "---- QUERY\nselect 2\n---- RESULTS\n2\n"
+                    "---- TYPES\nTINYINT\n====\n")
     with pytest.raises(RuntimeError, match="Header must not start"):
-        qt.parse_test_file(os.path.join(QT_DIR, "invalid_header.test"))
+        qt.parse_test_file(str(path))

@@ -148,6 +148,7 @@ def test_sql_broadcast_hint_respected(spark):
 
     load_table(spark, SF_SMALL, "orders").createOrReplaceTempView("orders_h")
     load_table(spark, SF_SMALL, "customer").createOrReplaceTempView("customer_h")
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         no_hint = spark.sql(
@@ -162,9 +163,7 @@ def test_sql_broadcast_hint_respected(spark):
         assert "BroadcastHashJoin" in _plan(hinted)
         assert hinted.collect() == no_hint.collect()
     finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
 
 
 # ---------------------------------------------------------------------------

@@ -107,16 +107,23 @@ def test_incremental_cover_lifecycle(eng):
 
 def test_bad_magic_always_aborts(eng, tmp_path):
     """IMPALA-7662 contract: the bad-magic error fires with
-    ABORT_ON_ERROR unset, and an INSERTed valid file doesn't mask it."""
-    import shutil
+    ABORT_ON_ERROR unset, and an INSERTed valid file doesn't mask it.
+    The corrupt file is built here: a valid one-column parquet file
+    whose leading and trailing PAR1 magic both read XXXX, like the
+    reference's bad_magic_number.parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from incubator_impala_spark import scan_errors as se
 
     loc = str(tmp_path / "bad_magic_t")
     os.makedirs(loc, exist_ok=True)
-    shutil.copyfile("/root/reference/testdata/data/"
-                    "bad_magic_number.parquet",
-                    os.path.join(loc, "bad_magic_number.parquet"))
+    bad = os.path.join(loc, "bad_magic_number.parquet")
+    pq.write_table(pa.table({"s": ["bad"]}), bad)
+    with open(bad, "r+b") as f:
+        f.write(b"XXXX")
+        f.seek(-4, os.SEEK_END)
+        f.write(b"XXXX")
     eng.sql("drop table if exists xtst_badmagic")
     eng.spark.sql(f"CREATE TABLE xtst_badmagic (s string) "
                   f"USING parquet LOCATION '{loc}'")
